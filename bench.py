@@ -162,12 +162,12 @@ def main() -> None:
 
     # warm the JVM, broadcast machinery and the Arrow python-worker pool so
     # per-query times measure the plan, not session spin-up
-    from geopy_spark.functions.cells import cell_encode_udf
+    from geopy_spark.functions.cells import cell_encode_col
     warm = spark.range(0, 100000, 1, 32).select(
         (F.col("id") % 89).cast("double").alias("lat"),
         (F.col("id") % 179).cast("double").alias("lon"),
         F.col("id"))
-    warm = warm.withColumn("c", cell_encode_udf(F.col("lat"), F.col("lon"), 7))
+    warm = warm.withColumn("c", cell_encode_col(F.col("lat"), F.col("lon"), 7))
     warm.join(F.broadcast(spark.range(10)), "id", "left_semi").count()
     load_table(spark, sf_dir, "lineitem").count()
 

@@ -1,12 +1,12 @@
 """Spark surface of the qcell index (SURVEY.md §2.2 G1-G3).
 
-* ``cell_encode_udf`` — pure Column bit math since round 6 (floor
-  arithmetic + Morton interleave via mask/shift ladders), zero Python:
-  the encode of the BIG side of every spatial operator stays inside
-  whole-stage codegen instead of paying an ArrowEvalPython round-trip
-  (name kept for API stability; byte-identical to kernels.cells
-  .cell_encode, asserted in tests/test_cells.py).
-* ``cell_parent_col`` / ``cell_level_col`` — pure Column bit math
+* ``cell_encode_col`` — pure Column bit math (floor arithmetic +
+  Morton interleave via mask/shift ladders), zero Python: the encode of
+  the BIG side of every spatial operator stays inside whole-stage
+  codegen instead of paying an ArrowEvalPython round-trip
+  (byte-identical to kernels.cells.cell_encode, asserted in
+  tests/test_cells.py).
+* ``cell_parent_expr`` / ``cell_level_col`` — pure Column bit math
   (shiftright/masks), zero Python: hierarchy navigation stays inside
   whole-stage codegen (G2).
 * ``cell_ring_udf`` — k-ring neighbors as ArrayType(Long) for explode-based
@@ -77,7 +77,7 @@ def ij_to_cell_col(i: Column, j: Column, level: int) -> Column:
     return F.shiftleft(m, 5).bitwiseOR(F.lit(level))
 
 
-def cell_encode_udf(lat: Column, lon: Column, level: int) -> Column:
+def cell_encode_col(lat: Column, lon: Column, level: int) -> Column:
     """(lat°, lon°) → int64 cell id at ``level`` — pure Column algebra,
     replicating kernels.cells.cell_encode operation-for-operation (same
     IEEE double sequence: clamp/wrap, (x+off)/span*2^L, floor, min) so

@@ -204,75 +204,3 @@ def cell_annulus_rect(cell: np.ndarray, ri_out: np.ndarray, rj_out: np.ndarray,
 def cell_size_deg(level: int) -> float:
     """Latitude extent of one cell in degrees at ``level``."""
     return 180.0 / float(2**level)
-
-
-def compact_cells(cells: np.ndarray) -> np.ndarray:
-    """Normalize a cell set into its minimal disjoint equivalent — the
-    S2 CellUnion.Normalize / H3 compactCells analogue. Two steps:
-
-    1. drop any cell one of whose ancestors is already in the set
-       (containment normalize, so mixed-level inputs are legal);
-    2. bottom-up, replace every complete 4-sibling group with its
-       parent, repeating until no level compacts further.
-
-    The result covers exactly the same region with pairwise-disjoint
-    cells — for polygon covers this typically shrinks the broadcast by
-    ~4x (interior quads collapse; the rim stays fine-grained)."""
-    cells = np.unique(np.asarray(cells, dtype=np.int64))
-    if cells.size == 0:
-        return cells
-    lvl = (cells.astype(np.uint64) & np.uint64(31)).astype(np.int64)
-    present_by_level = {int(v): set(cells[lvl == v].tolist())
-                        for v in np.unique(lvl)}
-    keep = np.ones(cells.size, dtype=bool)
-    for n, (c, v) in enumerate(zip(cells, lvl)):
-        for pv in present_by_level:
-            if pv < v and int(cell_parent(np.array([c]), pv)[0]) \
-                    in present_by_level[pv]:
-                keep[n] = False
-                break
-    cells = cells[keep]
-
-    while True:
-        c = cells.astype(np.uint64)
-        lvl = (c & np.uint64(31)).astype(np.int64)
-        max_lvl = int(lvl.max())
-        if max_lvl == 0:
-            return np.sort(cells)
-        deep = cells[lvl == max_lvl]
-        rest = cells[lvl != max_lvl]
-        parents = cell_parent(deep, max_lvl - 1)
-        uniq, counts = np.unique(parents, return_counts=True)
-        full = set(uniq[counts == 4].tolist())
-        if not full:
-            # nothing compacts at the deepest level: deeper cells are
-            # final; recurse over the rest only
-            if rest.size == 0:
-                return np.sort(cells)
-            done = deep
-            sub = compact_cells(rest)
-            return np.sort(np.concatenate([done, sub]))
-        keep_deep = deep[~np.isin(parents, list(full))]
-        cells = np.unique(np.concatenate(
-            [rest, keep_deep, np.fromiter(full, dtype=np.int64)]))
-
-
-def uncompact_cells(cells: np.ndarray, level: int) -> np.ndarray:
-    """Expand a (compacted) cell set to its full descendant set at
-    ``level`` — the H3 uncompactCells analogue; inverse of
-    compact_cells for sets wholly at ``level``. Raises if any cell is
-    deeper than ``level``."""
-    cells = np.asarray(cells, dtype=np.int64)
-    c = cells.astype(np.uint64)
-    lvl = (c & np.uint64(31)).astype(np.int64)
-    if (lvl > level).any():
-        raise ValueError(f"cell deeper than target level {level}")
-    out = []
-    for v in np.unique(lvl):
-        sub = c[lvl == v]
-        dl = np.uint64(2 * (level - int(v)))
-        base = (sub >> np.uint64(5)) << dl
-        k = np.arange(1 << int(dl), dtype=np.uint64)[None, :]
-        out.append((((base[:, None] | k) << np.uint64(5))
-                    | np.uint64(level)).astype(np.int64).ravel())
-    return np.sort(np.concatenate(out))

@@ -30,6 +30,10 @@ B2, P2 = 137, 2147483629   # prev prime
 
 _POW_CACHE: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
 
+# the prefix cumsum in _substr_hashes adds n residues < 2^31 in uint64:
+# exact only while the hashed string is shorter than 2^33 codepoints
+MAX_BATCH_CODEPOINTS = 2**33
+
 
 def _pow_table(base: int, P: int, size: int) -> np.ndarray:
     """base^i mod P for i in [0, size) — blocked build so the Python loop
@@ -139,8 +143,10 @@ def shingle_hashes_batch(texts, ngram: int = 3
     document. Empty documents take l == r, and hash("") is 0 in both
     rolls, reproducing the per-doc [0] sentinel through the same path.
     The uint64 cumsum in _substr_hashes stays exact while the CONCATENATED
-    batch is < 2^33 codepoints — Arrow batches are capped far below that
-    (2048 rows/batch session default)."""
+    batch is < ``MAX_BATCH_CODEPOINTS`` (2^33) codepoints — Arrow batches
+    are capped far below that (2048 rows/batch session default); a batch
+    at or past the bound raises ValueError instead of returning wrong
+    hashes."""
     norms = [" ".join(str(t).lower().split()) for t in texts]
     nd = len(norms)
     if nd == 0:
@@ -149,6 +155,11 @@ def shingle_hashes_batch(texts, ngram: int = 3
     dlen = np.fromiter((len(s) for s in norms), dtype=np.int64, count=nd)
     off = np.zeros(nd + 1, dtype=np.int64)
     np.cumsum(dlen, out=off[1:])
+    if off[-1] >= MAX_BATCH_CODEPOINTS:
+        raise ValueError(
+            f"shingle_hashes_batch: {int(off[-1])} codepoints in one batch; "
+            f"hashes are exact only below {MAX_BATCH_CODEPOINTS} — split "
+            f"the batch")
     blob = "".join(norms)
     cp1 = np.frombuffer(blob.encode("utf-32-le"), dtype=np.uint32
                         ).astype(np.uint64)

@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.cells import (cell_encode_udf, cell_i_col, cell_j_col,
+from ..functions.cells import (cell_encode_col, cell_i_col, cell_j_col,
                                ij_to_cell_col)
 from ..functions.geo import haversine_m
 from ..kernels import cells as K
@@ -52,7 +52,7 @@ DEFAULT_LEVEL = 4
 
 
 def _with_cell(df: DataFrame, level: int) -> DataFrame:
-    return df.withColumn("cell", cell_encode_udf(F.col("lat"), F.col("lon"), level))
+    return df.withColumn("cell", cell_encode_col(F.col("lat"), F.col("lon"), level))
 
 
 # exploded query-disk rows up to which the fan-out side broadcasts; above

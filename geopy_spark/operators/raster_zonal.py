@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels import pip as P
-from .spatial_join import DEFAULT_LEVEL, polygon_join
+from .spatial_join import DEFAULT_LEVEL, polygon_join, with_holes
 
 _OUT_SCHEMA = ("image_id string, poly_id long, n_px long, sum_val double, "
                "mean_val double, min_val double, max_val double")
@@ -101,9 +101,7 @@ def raster_zonal_stats(images: DataFrame, regions: DataFrame, *,
               .filter(F.col("lat_min").isNotNull()))
     rects = _rect_layer(bounds)
 
-    if "holes" not in regions.columns:
-        regions = regions.withColumn(
-            "holes", F.array().cast("array<array<array<double>>>"))
+    regions = with_holes(regions)
 
     pairs = polygon_join(rects, regions, level=level,
                          predicate="intersects",

@@ -3,11 +3,16 @@
 Plan shape (scale rationale):
 
     polygons --cover UDF--> explode(cells)      [small side, broadcast-able]
-    points   --encode UDF--> cell               [big side, stays put]
+    points   --encode (Column math)--> cell     [big side, stays put]
     equi-join on cell  (broadcast when the exploded cover fits,
                         else cell-bucketed shuffle join + AQE skew split)
     bbox residual (Column algebra, pre-prunes most false cover hits)
-    exact PIP residual (vectorized Arrow UDF, grouped per polygon)
+    exact PIP residual (vectorized Arrow UDF, grouped per geometry)
+
+The cover rows (``cover_rows``, schema ``COVER_COLS``) and the refine
+tail (``pip_refine``: bbox prune → geometry-clustering sort → PIP) are
+defined here once; the streaming join (streaming/spatial) and the
+pre-bucketed cover store (sources/polystore) reuse both.
 
 At 100 TB the point side never shuffles on the broadcast path; on the SMJ
 path both sides hash-partition on `cell` — the key is hierarchical, so a
@@ -28,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType, LongType
 
-from ..functions.cells import cell_encode_udf
+from ..functions.cells import cell_encode_col
 from ..kernels import pip as P
 
 DEFAULT_LEVEL = 6
@@ -37,6 +42,15 @@ DEFAULT_LEVEL = 6
 # knn.BROADCAST_MAX_CELLS): past this the cover no longer fits a sane
 # driver/executor broadcast and the cell-bucketed salted SMJ path wins
 BROADCAST_MAX_COVER_ROWS = 4_000_000
+
+# salted-SMJ path: each hot cell's cover rows are replicated this many
+# times and its points spread over as many salt buckets
+SALT_FACTOR = 8
+
+# one exploded cover row per (polygon part, covering cell): the cell key,
+# the output id, the per-geometry PIP group key, the geometry and its bbox
+COVER_COLS = ("cell", "poly_id", "__geom", "ring", "holes",
+              "lat_min", "lat_max", "lon_min", "lon_max")
 
 # estimate memo keyed by the (immutable) region DataFrame instance —
 # callers reuse one dim frame across many joins, and the guard's one
@@ -94,63 +108,69 @@ def _np_holes(flat, sizes) -> list:
 
 
 def polygon_cover_udf(ring: Column, level: int,
-                      holes: Column | None = None,
-                      compact: bool = False) -> Column:
+                      holes: Column | None = None) -> Column:
     """ring array<array<double>> (+ optional holes
-    array<array<array<double>>>) → covering cells array<long> (G4).
-    ``compact=True`` normalizes each cover to its minimal disjoint
-    mixed-level equivalent (kernels.cells.compact_cells) — interior
-    quads collapse to ancestors, the rim stays fine."""
-    from ..kernels.cells import compact_cells
-
+    array<array<array<double>>>) → covering cells array<long> (G4)."""
     @F.pandas_udf(ArrayType(LongType()))
     def _cover(r: pd.Series, hf: pd.Series, hs: pd.Series) -> pd.Series:
-        out = []
-        for ring_, flat_, sizes_ in zip(r, hf, hs):
-            cov = P.polygon_cover(_np_ring(ring_), level,
-                                  holes=_np_holes(flat_, sizes_))
-            out.append((compact_cells(cov) if compact else cov).tolist())
-        return pd.Series(out)
+        return pd.Series([
+            P.polygon_cover(_np_ring(ring_), level,
+                            holes=_np_holes(flat_, sizes_)).tolist()
+            for ring_, flat_, sizes_ in zip(r, hf, hs)])
     return _cover(ring, *_holes_transport(holes))
 
 
-def geom_key(ring: Column = None, holes: Column = None,
-             poly_id: Column = None) -> Column:
-    """JVM-side geometry identity: xxhash64 of the JSON-rendered rings
-    (+ poly_id). Computed ONCE per region row BEFORE the cover explode
-    and carried through the candidate join as a narrow long — so pip_udf
-    can group exactly by geometry with ZERO per-candidate python cost
-    (review r5: the per-row fingerprint loop ran on the fact side)."""
-    cols = []
-    if poly_id is not None:
-        cols.append(poly_id)
-    cols.append(F.to_json(F.struct((ring if ring is not None
-                                    else F.col("ring")).alias("r"))))
-    if holes is not None:
-        cols.append(F.to_json(F.struct(holes.alias("h"))))
-    return F.xxhash64(*cols)
+def with_holes(regions: DataFrame) -> DataFrame:
+    """Interior rings are opt-in by column presence: a regions frame
+    without ``holes`` gets an empty list per row (solid polygons)."""
+    if "holes" in regions.columns:
+        return regions
+    return regions.withColumn(
+        "holes", F.array().cast("array<array<array<double>>>"))
 
 
-def pip_udf(lat: Column, lon: Column, poly_id: Column, ring: Column,
-            holes: Column | None = None,
-            group: Column | None = None) -> Column:
+def _prep_regions(regions: DataFrame) -> DataFrame:
+    # a handful of polygons spread over createDataFrame's default N
+    # partitions pays N python-worker warmups for rows that fit in one
+    # Arrow batch — compact the vector side before its cover UDF
+    # (coalesce never increases partition count, so this is a no-op for
+    # already-compact inputs; no df.rdd plan conversion needed)
+    return with_holes(regions.coalesce(8))
+
+
+def cover_rows(regions: DataFrame, level: int) -> DataFrame:
+    """regions (poly_id, ring, bbox [, holes]) → one ``COVER_COLS`` row
+    per (region row, covering cell) at ``level``.
+
+    ``__geom`` is the JVM-side geometry identity — xxhash64 of poly_id
+    and the JSON-rendered rings — computed ONCE per region row before
+    the explode and carried through the candidate join as a narrow long,
+    so pip_udf groups exactly by geometry (MultiPolygon parts sharing a
+    poly_id are each tested against their own ring) at zero
+    per-candidate python cost."""
+    return (_prep_regions(regions)
+            .withColumn("__geom", F.xxhash64(
+                F.col("poly_id"),
+                F.to_json(F.struct(F.col("ring").alias("r"))),
+                F.to_json(F.struct(F.col("holes").alias("h")))))
+            .withColumn("cell", F.explode(polygon_cover_udf(
+                F.col("ring"), level, holes=F.col("holes"))))
+            .select(*COVER_COLS))
+
+
+def pip_udf(lat: Column, lon: Column, ring: Column, holes: Column | None,
+            group: Column) -> Column:
     """Exact point-in-polygon test (G5) — outer ring minus interior
-    rings — vectorized per polygon group within each Arrow batch
-    (candidate pairs arrive clustered by polygon).
+    rings — vectorized per geometry within each Arrow batch.
 
-    Grouping must distinguish GEOMETRY, not just poly_id (ADVICE r4
-    medium): MultiPolygon PARTS share poly_id, and a batch holding rows
-    of two parts must test each row against ITS OWN ring. The fast path
-    is ``group`` — a precomputed per-geometry key (geom_key(), a narrow
-    long carried from the region side; vectorized int64 groupby, no
-    per-candidate python). Without it, a per-row O(1) fingerprint
-    (vertex count, first/middle outer vertices, hole count) sub-groups
-    each poly_id — correct but python-per-row; the engine's operators
-    all pass ``group``."""
+    ``group`` is a per-geometry key (``__geom`` of the cover rows): rows
+    sharing it share ring and holes, so each group pays one ring setup.
+    It must distinguish GEOMETRY, not just poly_id (ADVICE r4 medium):
+    MultiPolygon PARTS share poly_id, and a batch holding rows of two
+    parts must test each row against ITS OWN ring."""
     @F.pandas_udf(BooleanType())
-    def _pip_grouped(la: pd.Series, lo: pd.Series, grp: pd.Series,
-                     rg: pd.Series, hf: pd.Series,
-                     hs: pd.Series) -> pd.Series:
+    def _pip(la: pd.Series, lo: pd.Series, grp: pd.Series,
+             rg: pd.Series, hf: pd.Series, hs: pd.Series) -> pd.Series:
         out = np.zeros(len(la), dtype=bool)
         la_np = la.to_numpy(np.float64)
         lo_np = lo.to_numpy(np.float64)
@@ -162,48 +182,34 @@ def pip_udf(lat: Column, lon: Column, poly_id: Column, ring: Column,
             out[ii] = P.points_in_polygon(la_np[ii], lo_np[ii], ring_np,
                                           holes=holes_np)
         return pd.Series(out)
+    return _pip(lat, lon, group, ring, *_holes_transport(holes))
 
-    @F.pandas_udf(BooleanType())
-    def _pip(la: pd.Series, lo: pd.Series, pid: pd.Series,
-             rg: pd.Series, hf: pd.Series, hs: pd.Series) -> pd.Series:
-        out = np.zeros(len(la), dtype=bool)
-        la_np = la.to_numpy(np.float64)
-        lo_np = lo.to_numpy(np.float64)
-        fps = np.empty(len(pid), dtype=object)
-        rg_vals, hf_vals = rg.values, hf.values
-        for i in range(len(pid)):
-            # full-geometry fingerprint (ADVICE r5: the old sampled
-            # fingerprint — vertex count + first/middle vertex + hole
-            # count — could collide for MultiPolygon parts differing
-            # only in unsampled vertices or hole shape, silently testing
-            # rows against the wrong ring). This fallback only runs for
-            # pre-round-5 covers lacking __geom; engine operators all
-            # pass ``group``.
-            fps[i] = hash((
-                _np_ring(rg_vals[i]).tobytes(),
-                _np_ring(hf_vals[i]).tobytes() if len(hf_vals[i])
-                else b""))
-        groups = pd.Series(range(len(pid))).groupby(
-            [pid.values, fps]).groups.items()
-        for _, idx in groups:
-            ii = np.asarray(idx)
-            ring_np = _np_ring(rg.iloc[ii[0]])
-            holes_np = _np_holes(hf.iloc[ii[0]], hs.iloc[ii[0]])
-            out[ii] = P.points_in_polygon(la_np[ii], lo_np[ii], ring_np,
-                                          holes=holes_np)
-        return pd.Series(out)
 
-    if group is not None:
-        return _pip_grouped(lat, lon, group, ring,
-                            *_holes_transport(holes))
-    return _pip(lat, lon, poly_id, ring, *_holes_transport(holes))
+def pip_refine(cand: DataFrame) -> DataFrame:
+    """Refine tail shared by every point⋈polygon path: candidate rows
+    (point lat/lon joined with ``COVER_COLS``) → exact containment hits.
+
+    The bbox prune is Column algebra and drops most false cover hits
+    before the Python node. On batch frames a local sort (no shuffle)
+    then clusters each partition's candidates by geometry, so every
+    Arrow batch holds long single-geometry runs and the vectorized PIP
+    pays one ring setup per run instead of one per (batch, polygon)
+    pair — measured 185s → seconds at 600k x 2k. Spark disallows that
+    sort on an unaggregated stream; there pip_udf still groups by
+    geometry within each batch, so answers are unchanged."""
+    cand = cand.filter(
+        (F.col("lat") >= F.col("lat_min")) & (F.col("lat") <= F.col("lat_max")) &
+        (F.col("lon") >= F.col("lon_min")) & (F.col("lon") <= F.col("lon_max")))
+    if not cand.isStreaming:
+        cand = cand.sortWithinPartitions("__geom")
+    return cand.filter(pip_udf(F.col("lat"), F.col("lon"), F.col("ring"),
+                               F.col("holes"), F.col("__geom")))
 
 
 def spatial_join(points: DataFrame, regions: DataFrame, *,
                  point_id: str = "point_id", level: int = DEFAULT_LEVEL,
                  broadcast_regions: bool | None = None,
-                 salt_factor: int = 8, hot_min_count: int | None = None,
-                 compact_cover: bool = False,
+                 hot_min_count: int | None = None,
                  keep_point_cols: list[str] | None = None) -> DataFrame:
     """Exact point-in-polygon join.
 
@@ -217,7 +223,7 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     point side never shuffles. False → cell-bucketed shuffle join with
     explicit salting of hot cells (G10): a frequency pre-pass over the point
     side finds cells above ``hot_min_count`` (default: 20x the mean cell
-    occupancy), only those get salted by ``salt_factor``.
+    occupancy), only those get salted by ``SALT_FACTOR``.
 
     broadcast_regions=None (default) SIZE-GUARDS the choice (VERDICT r2
     perf-weak fix): one cheap agg over the region side's bbox columns
@@ -228,68 +234,16 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     vector side with defaults gets the salted SMJ path instead of an OOM.
     The guard reads ONLY the four bbox columns (the cover UDF does not
     run) and costs one count-style job.
-
-    compact_cover=True (broadcast path only): each polygon's cover is
-    normalized to its minimal DISJOINT mixed-level cell set (S2
-    CellUnion / H3 compact analogue — interior quads collapse to
-    ancestors, rims stay fine, typically ~4x fewer rows to broadcast),
-    and each point probes with its ancestor-cell chain (level+1 cells,
-    pure Column bit math, narrow). Disjointness keeps the ≤1-candidate-
-    per-(point, polygon) property, so no dedup shuffle appears. The
-    trade: (level+1)x hash-probe work on the point side for a ~4x
-    smaller build side — worth it when the cover is near the broadcast
-    ceiling. Ignored on the salted-SMJ path (mixed-level keys would
-    break hot-cell detection).
     """
-    # a handful of polygons spread over createDataFrame's default N
-    # partitions pays N python-worker warmups for rows that fit in one
-    # Arrow batch — compact the vector side before its cover UDF
-    # (coalesce never increases partition count, so this is a no-op for
-    # already-compact inputs; no df.rdd plan conversion needed)
-    regions_in = regions  # memo key: the caller's (immutable) frame
-    regions = regions.coalesce(8)
-    # interior rings are opt-in by column presence: a regions frame
-    # without `holes` behaves exactly as before (solid polygons)
-    if "holes" not in regions.columns:
-        regions = regions.withColumn(
-            "holes", F.array().cast("array<array<array<double>>>"))
-    # per-geometry key, computed once per REGION row (small side) and
-    # carried as a narrow long: the PIP residual groups by it, so
-    # MultiPolygon parts sharing a poly_id are each tested against their
-    # own ring at zero per-candidate cost
-    regions = regions.withColumn("__geom", geom_key(
-        F.col("ring"), F.col("holes"), F.col("poly_id")))
-    cov = (regions
-           .withColumn("cell", F.explode(polygon_cover_udf(
-               F.col("ring"), level, holes=F.col("holes"))))
-           .select("cell", "poly_id", "__geom", "ring", "holes",
-                   "lat_min", "lat_max", "lon_min", "lon_max"))
-
-    pts = points.withColumn("cell", cell_encode_udf(F.col("lat"), F.col("lon"), level))
+    cov = cover_rows(regions, level)
+    pts = points.withColumn("cell", cell_encode_col(F.col("lat"), F.col("lon"), level))
 
     if broadcast_regions is None:
-        broadcast_regions = (_cover_estimate(regions_in, level)
+        # memo key: the caller's (immutable) frame, not the coalesced one
+        broadcast_regions = (_cover_estimate(regions, level)
                              <= BROADCAST_MAX_COVER_ROWS)
 
     if broadcast_regions:
-        if compact_cover:
-            from ..functions.cells import cell_parent_expr
-            cov = (regions
-                   .withColumn("cell", F.explode(polygon_cover_udf(
-                       F.col("ring"), level, holes=F.col("holes"),
-                       compact=True)))
-                   .select("cell", "poly_id", "__geom", "ring", "holes",
-                           "lat_min", "lat_max", "lon_min", "lon_max"))
-            # probe with the ancestor chain: disjoint mixed-level cover
-            # ⇒ at most one of these level+1 cells matches per polygon
-            pts = (points
-                   .withColumn("cell_leaf", cell_encode_udf(
-                       F.col("lat"), F.col("lon"), level))
-                   .withColumn("cell", F.explode(F.array(
-                       F.col("cell_leaf"),
-                       *[cell_parent_expr("cell_leaf", lv)
-                         for lv in range(level)])))
-                   .drop("cell_leaf"))
         cand = pts.join(F.broadcast(cov), "cell")
     else:
         from .skew import salted_join
@@ -313,26 +267,13 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
         hot = cell_counts.filter(F.col("count") > hot_min_count) \
             .select("cell", F.col("count").alias("hot_count"))
         cand = salted_join(
-            pts, cov, "cell", hot=hot, factor=salt_factor,
-            big_salt_expr=F.pmod(F.hash(F.col(point_id)), F.lit(salt_factor)))
+            pts, cov, "cell", hot=hot, factor=SALT_FACTOR,
+            big_salt_expr=F.pmod(F.hash(F.col(point_id)), F.lit(SALT_FACTOR)))
 
-    cand = cand.filter(
-        (F.col("lat") >= F.col("lat_min")) & (F.col("lat") <= F.col("lat_max")) &
-        (F.col("lon") >= F.col("lon_min")) & (F.col("lon") <= F.col("lon_max")))
-
-    # cluster candidates by geometry inside each partition (local sort,
-    # no shuffle) so every Arrow batch holds long single-geometry runs —
-    # the vectorized PIP then does one ring setup per run instead of one
-    # per (batch, polygon) pair; measured 185s → seconds at 600k x 2k
-    cand = cand.sortWithinPartitions("__geom")
-
-    hit = cand.filter(pip_udf(F.col("lat"), F.col("lon"), F.col("poly_id"),
-                              F.col("ring"), holes=F.col("holes"),
-                              group=F.col("__geom")))
     # keep_point_cols ride for free: the candidate join already carries
     # every point column, so consumers (e.g. zonal_stats) avoid a second
     # points-side shuffle to re-attach values by id
-    return hit.select(point_id, "poly_id", *(keep_point_cols or []))
+    return pip_refine(cand).select(point_id, "poly_id", *(keep_point_cols or []))
 
 
 # ------------------------------------------------------- polygon ⋈ polygon
@@ -361,14 +302,6 @@ def polygons_intersect_udf(ring_a: Column, holes_a: Column | None,
         return pd.Series(out)
     return _pi(ring_a, *_holes_transport(holes_a),
                ring_b, *_holes_transport(holes_b))
-
-
-def _prep_polys(df: DataFrame) -> DataFrame:
-    df = df.coalesce(8)
-    if "holes" not in df.columns:
-        df = df.withColumn("holes",
-                           F.array().cast("array<array<array<double>>>"))
-    return df
 
 
 def polygon_join(left: DataFrame, right: DataFrame, *,
@@ -401,7 +334,7 @@ def polygon_join(left: DataFrame, right: DataFrame, *,
     twice and filter l_id < r_id for unordered pairs (the join emits
     both orders and the diagonal).
     """
-    L, R = _prep_polys(left), _prep_polys(right)
+    L, R = _prep_regions(left), _prep_regions(right)
     if broadcast_right is None:
         broadcast_right = (_cover_estimate(right, level)
                            <= BROADCAST_MAX_COVER_ROWS)

@@ -28,13 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_encode_udf
-from ..operators.spatial_join import (DEFAULT_LEVEL, geom_key, pip_udf,
-                                      polygon_cover_udf)
+from ..functions.cells import cell_encode_col
+from ..operators.spatial_join import DEFAULT_LEVEL, cover_rows, pip_refine
 from .bucketed import write_bucketed
-
-COVER_COLS = ("cell", "poly_id", "__geom", "ring", "holes",
-              "lat_min", "lat_max", "lon_min", "lon_max")
 
 
 def write_region_cover_bucketed(regions: DataFrame, table_fqn: str, *,
@@ -45,17 +41,8 @@ def write_region_cover_bucketed(regions: DataFrame, table_fqn: str, *,
     write hash-bucketed + sorted by `cell`. Pick n_buckets for the TARGET
     scale (each bucket should stay executor-memory-sized) and reuse the
     SAME count for the points side."""
-    regions = regions.coalesce(8)
-    if "holes" not in regions.columns:
-        regions = regions.withColumn(
-            "holes", F.array().cast("array<array<array<double>>>"))
-    regions = regions.withColumn("__geom", geom_key(
-        F.col("ring"), F.col("holes"), F.col("poly_id")))
-    cov = (regions
-           .withColumn("cell", F.explode(polygon_cover_udf(
-               F.col("ring"), level, holes=F.col("holes"))))
-           .select(*COVER_COLS))
-    write_bucketed(cov, table_fqn, "cell", n_buckets=n_buckets)
+    write_bucketed(cover_rows(regions, level), table_fqn, "cell",
+                   n_buckets=n_buckets)
     # record the cover level so later ad-hoc joins can refuse a mismatch
     # (joining level-7 point cells against a level-6 cover silently
     # returns nothing — fail loudly instead)
@@ -80,7 +67,7 @@ def write_points_bucketed(points: DataFrame, table_fqn: str, *,
     sorted by `cell` with the same bucket count as the cover table —
     the one-time shuffle that makes every later join exchange-free."""
     pts = points.withColumn(
-        "cell", cell_encode_udf(F.col(lat), F.col(lon), level))
+        "cell", cell_encode_col(F.col(lat), F.col(lon), level))
     write_bucketed(pts, table_fqn, "cell", n_buckets=n_buckets)
     spark = points.sparkSession
     spark.sql(f"ALTER TABLE {table_fqn} SET TBLPROPERTIES "
@@ -105,7 +92,7 @@ def spatial_join_bucketed(spark: SparkSession, points_fqn: str,
             f"silently return nothing")
     pts = spark.table(points_fqn)
     cov = spark.table(cover_fqn)
-    return _residual_join(pts, cov, point_id)
+    return pip_refine(pts.join(cov, "cell")).select(point_id, "poly_id")
 
 
 def spatial_join_against_cover(points: DataFrame, spark: SparkSession,
@@ -123,27 +110,6 @@ def spatial_join_against_cover(points: DataFrame, spark: SparkSession,
             f"{cover_fqn} was written at cover level {stored}, "
             f"join requested level {level}")
     pts = points.withColumn(
-        "cell", cell_encode_udf(F.col("lat"), F.col("lon"), level))
+        "cell", cell_encode_col(F.col("lat"), F.col("lon"), level))
     cov = spark.table(cover_fqn)
-    return _residual_join(pts, cov, point_id)
-
-
-def _residual_join(pts: DataFrame, cov: DataFrame,
-                   point_id: str) -> DataFrame:
-    """Shared candidate → bbox-prune → PIP-residual tail; groups the PIP
-    by the stored per-geometry key when the cover carries one (covers
-    written before round-5's __geom column fall back to the fingerprint
-    path inside pip_udf — correct either way)."""
-    grp = F.col("__geom") if "__geom" in cov.columns else None
-    cand = pts.join(cov, "cell").filter(
-        (F.col("lat") >= F.col("lat_min")) & (F.col("lat") <= F.col("lat_max"))
-        & (F.col("lon") >= F.col("lon_min"))
-        & (F.col("lon") <= F.col("lon_max")))
-    # local sort clusters each partition's candidates by geometry so the
-    # vectorized PIP pays one ring setup per run — narrow op, no Exchange
-    cand = cand.sortWithinPartitions("__geom" if grp is not None
-                                     else "poly_id")
-    hit = cand.filter(pip_udf(F.col("lat"), F.col("lon"), F.col("poly_id"),
-                              F.col("ring"), holes=F.col("holes"),
-                              group=grp))
-    return hit.select(point_id, "poly_id")
+    return pip_refine(pts.join(cov, "cell")).select(point_id, "poly_id")

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cells import cell_encode_udf, cell_parent_expr
+from ..functions.cells import cell_encode_col, cell_parent_expr
 
 
 def write_points_sorted(points: DataFrame, path: str, *,
@@ -26,7 +26,7 @@ def write_points_sorted(points: DataFrame, path: str, *,
     """points(+lat,lon) → parquet partitioned by pcell (coarse), sorted by
     cell (fine) within files."""
     df = (points
-          .withColumn("cell", cell_encode_udf(F.col(lat), F.col(lon), level))
+          .withColumn("cell", cell_encode_col(F.col(lat), F.col(lon), level))
           .withColumn("pcell", cell_parent_expr("cell", coarse_level)))
     (df.repartition("pcell")
        .sortWithinPartitions("cell")

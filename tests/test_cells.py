@@ -85,46 +85,14 @@ def test_z_order_locality():
     assert changes == len(np.unique(p)) - 1
 
 
-def test_compact_uncompact_roundtrip_and_disjointness():
-    """compact_cells: minimal disjoint equivalent (complete quads
-    collapse, ancestors swallow descendants); uncompact inverts it."""
-    import numpy as np
-    from geopy_spark.kernels.cells import (cell_children, cell_encode,
-                                           cell_parent, compact_cells,
-                                           uncompact_cells)
-    rng = np.random.default_rng(11)
-    p6 = cell_encode(rng.uniform(-50, 50, 6), rng.uniform(-170, 170, 6), 6)
-    # all level-8 descendants of the level-6 cells + loose level-8 cells
-    kids8 = np.concatenate([uncompact_cells(p6, 8)])
-    loose = cell_encode(rng.uniform(-50, 50, 4), rng.uniform(-170, 170, 4), 8)
-    inp = np.concatenate([kids8, loose])
-    comp = compact_cells(inp)
-    # complete quads collapsed all the way back to the level-6 ancestors
-    assert set(np.unique(p6).tolist()) <= set(comp.tolist())
-    assert len(comp) < len(np.unique(inp))
-    # exact region equality at the finest level
-    assert set(uncompact_cells(comp, 8).tolist()) == set(np.unique(inp).tolist())
-    # pairwise disjoint: no cell's ancestor is present at any level
-    cs = set(comp.tolist())
-    for c in comp:
-        lvl = int(c) & 31
-        for pv in range(lvl):
-            assert int(cell_parent(np.array([c]), pv)[0]) not in cs
-    # ancestor swallows descendants in mixed input
-    par = p6[:1]
-    kid = cell_children(par).ravel()[:3]
-    assert set(compact_cells(np.concatenate([par, kid])).tolist()) \
-        == set(par.tolist())
-
-
 def test_column_encode_matches_kernel(spark):
-    """cell_encode_udf is pure Column bit math since round 6 — ids must
+    """cell_encode_col is pure Column bit math — ids must
     stay byte-identical to the numpy kernel across levels, hemisphere
     edges, clamp/wrap inputs and cell boundaries."""
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from geopy_spark.functions.cells import cell_encode_udf
+    from geopy_spark.functions.cells import cell_encode_col
 
     rng = np.random.default_rng(11)
     lat = np.concatenate([
@@ -139,12 +107,12 @@ def test_column_encode_matches_kernel(spark):
     df = spark.createDataFrame(pdf)
     for lvl in (0, 1, 7, 8, 12, 28):
         got = np.array(
-            df.select(cell_encode_udf(F.col("lat"), F.col("lon"), lvl)
+            df.select(cell_encode_col(F.col("lat"), F.col("lon"), lvl)
                       .alias("c")).toPandas()["c"], dtype=np.int64)
         want = K.cell_encode(lat, lon, lvl)
         assert np.array_equal(got, want), f"level {lvl} mismatch"
     # the expression must stay UDF-free (codegen path, guide §4.1)
-    plan = df.select(cell_encode_udf(F.col("lat"), F.col("lon"), 8))._jdf \
+    plan = df.select(cell_encode_col(F.col("lat"), F.col("lon"), 8))._jdf \
         .queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 

@@ -137,16 +137,19 @@ def test_dbscan_border_point_deterministic(spark):
     assert got[7] == (None, False, 1)
 
 
-def test_dbscan_hashmin_equals_star(spark):
-    """Both component algorithms yield identical labels (hash-min is the
-    low-diameter fast path for spatially compact eps clusters)."""
+def test_dbscan_driver_equals_star(spark, monkeypatch):
+    """Both connected-components paths yield identical dbscan labels:
+    the driver union-find (this graph is below the edge guard) and the
+    distributed star loop (guard forced to 0)."""
+    from geopy_spark.operators import graph
+
     ids, lat, lon = _fixture()
     df = spark.createDataFrame(
         [(int(i), float(la), float(lo)) for i, la, lo in zip(ids, lat, lon)],
         "id long, lat double, lon double")
     a = {r.id: (r.cluster, r.is_core)
          for r in dbscan(df, 30_000.0, 5, level=6).collect()}
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
     b = {r.id: (r.cluster, r.is_core)
-         for r in dbscan(df, 30_000.0, 5, level=6,
-                         cc_algorithm="hashmin").collect()}
+         for r in dbscan(df, 30_000.0, 5, level=6).collect()}
     assert a == b

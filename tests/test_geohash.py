@@ -57,10 +57,10 @@ def test_column_surface_and_cell_handoff(spark):
         assert abs(la - dla) < 3e-5 and abs(lo - dlo) < 3e-5
     # foreign geohash keys flow into the engine's own cell index: decode
     # centers re-encode to the same S2-style cell as the original point
-    from geopy_spark.functions.cells import cell_encode_udf
-    chk = (dec.withColumn("c_orig", cell_encode_udf(F.col("lat"),
+    from geopy_spark.functions.cells import cell_encode_col
+    chk = (dec.withColumn("c_orig", cell_encode_col(F.col("lat"),
                                                     F.col("lon"), 6))
-           .withColumn("c_gh", cell_encode_udf(F.col("d.lat"),
+           .withColumn("c_gh", cell_encode_col(F.col("d.lat"),
                                                F.col("d.lon"), 6)))
     n_bad = chk.filter(F.col("c_orig") != F.col("c_gh")).count()
     # 9-char geohash cells (~5 m) sit far inside level-6 cells (~300 km);

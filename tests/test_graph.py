@@ -1,11 +1,19 @@
 """connected_components (operators/graph): exact equivalence with a
 python union-find on random graphs, chain convergence, and the fixpoint
-guard."""
+guard. Graphs this small take the driver union-find path; tests that
+need the distributed star loop set ``DRIVER_CC_MAX_EDGES`` to 0."""
 
 import numpy as np
 import pytest
 
+from geopy_spark.operators import graph
 from geopy_spark.operators.graph import connected_components
+
+
+@pytest.fixture
+def star_only(monkeypatch):
+    """Force every graph above the driver guard: the star loop runs."""
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
 
 
 def _union_find(edges, nodes):
@@ -29,34 +37,27 @@ def _union_find(edges, nodes):
     return {n: min(members) for r, members in comp.items() for n in members}
 
 
-@pytest.mark.parametrize("algorithm", ["star", "hashmin"])
+@pytest.mark.parametrize("path", ["star", "driver"])
 @pytest.mark.parametrize("seed,n_nodes,n_edges", [(1, 200, 150), (2, 500, 700)])
-def test_cc_matches_union_find_random(spark, algorithm, seed, n_nodes, n_edges):
+def test_cc_matches_union_find_random(spark, monkeypatch, path, seed,
+                                      n_nodes, n_edges):
+    if path == "star":
+        monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
     rng = np.random.default_rng(seed)
     edges = [(int(a), int(b)) for a, b in
              rng.integers(0, n_nodes, (n_edges, 2)) if a != b]
     df = spark.createDataFrame(edges, "a long, b long")
     got = {r.node: r.component
-           for r in connected_components(df, algorithm=algorithm).collect()}
+           for r in connected_components(df).collect()}
     nodes = sorted({x for e in edges for x in e})
     exp = _union_find(edges, nodes)
     assert got == exp
 
 
-def test_cc_long_chain_converges(spark):
-    """A path graph is hash-min's worst case (diameter rounds); a chain
-    of 30 must still resolve to a single component within the cap."""
-    edges = [(i, i + 1) for i in range(30)]
-    df = spark.createDataFrame(edges, "a long, b long")
-    out = connected_components(df, algorithm="hashmin", max_iter=40).collect()
-    assert {r.component for r in out} == {0}
-    assert len(out) == 31
-
-
-def test_cc_star_1000_node_path(spark):
-    """VERDICT r2 #4: the default (star) algorithm must resolve a
-    1000-node path graph — diameter 999, hash-min's impossible case at
-    max_iter=30 — in O(log n) rounds."""
+def test_cc_star_1000_node_path(spark, star_only):
+    """VERDICT r2 #4: the star loop must resolve a 1000-node path graph
+    — diameter 999, impossible for label propagation at max_iter=30 — in
+    O(log n) rounds."""
     edges = [(i, i + 1) for i in range(999)]
     df = spark.createDataFrame(edges, "a long, b long")
     out = connected_components(df, max_iter=20).collect()
@@ -64,7 +65,7 @@ def test_cc_star_1000_node_path(spark):
     assert len(out) == 1000
 
 
-def test_cc_reliable_checkpoint_dir(spark, tmp_path):
+def test_cc_reliable_checkpoint_dir(spark, tmp_path, monkeypatch):
     """checkpoint_dir switches per-round truncation to RELIABLE
     checkpoint() files under the given dir (executor-loss-safe on a real
     cluster); results are identical and files actually land there."""
@@ -72,22 +73,22 @@ def test_cc_reliable_checkpoint_dir(spark, tmp_path):
     edges = [(i, i + 1) for i in range(50)] + [(200, 201), (201, 202)]
     df = spark.createDataFrame(edges, "a long, b long")
     ckdir = str(tmp_path / "cc_ckpt")
-    # algorithm pinned to "star": the reliable-checkpoint machinery only
-    # exists on the iterative distributed paths — "auto" solves a graph
-    # this small on the driver, where there is no iteration to protect
-    got = {r.node: r.component
-           for r in connected_components(df, algorithm="star",
-                                         checkpoint_dir=ckdir).collect()}
     exp = {r.node: r.component for r in connected_components(df).collect()}
+    # star loop forced: the reliable-checkpoint machinery only exists on
+    # the iterative distributed path — a graph this small is otherwise
+    # solved on the driver, where there is no iteration to protect
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
+    got = {r.node: r.component
+           for r in connected_components(df, checkpoint_dir=ckdir).collect()}
     assert got == exp
     assert any(files for _, _, files in os.walk(ckdir))
 
 
-def test_cc_fixpoint_guard_raises(spark):
+def test_cc_fixpoint_guard_raises(spark, star_only):
     edges = [(i, i + 1) for i in range(12)]
     df = spark.createDataFrame(edges, "a long, b long")
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(df, algorithm="hashmin", max_iter=2)
+        connected_components(df, max_iter=1)
 
 
 def test_edge_signature_order_insensitive_and_discriminating(spark):
@@ -110,8 +111,8 @@ def test_edge_signature_order_insensitive_and_discriminating(spark):
     assert _edge_signature(a) != _edge_signature(d)
 
 
-def test_cc_auto_driver_matches_star(spark):
-    """The size-guarded driver union-find ("auto" below the edge cap)
+def test_cc_auto_driver_matches_star(spark, monkeypatch):
+    """The size-guarded driver union-find (below DRIVER_CC_MAX_EDGES)
     must label identically to the distributed star loop: random sparse
     graph with chains, cliques, self-loops and isolated-by-self-loop
     nodes."""
@@ -123,14 +124,9 @@ def test_cc_auto_driver_matches_star(spark):
     edges += [(rnd.randrange(700, 760), rnd.randrange(700, 760))
               for _ in range(60)]
     df = spark.createDataFrame(edges, "a long, b long")
-    auto = {r.node: r.component
-            for r in connected_components(df, algorithm="auto").collect()}
+    driver = {r.node: r.component
+              for r in connected_components(df).collect()}
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
     star = {r.node: r.component
-            for r in connected_components(df, algorithm="star").collect()}
-    assert auto == star
-    # above the guard the distributed loop must still be the one running
-    # (smoke: force a 1-edge cap and check results are unchanged)
-    capped = {r.node: r.component
-              for r in connected_components(df, algorithm="auto",
-                                            driver_max_edges=1).collect()}
-    assert capped == star
+            for r in connected_components(df).collect()}
+    assert driver == star

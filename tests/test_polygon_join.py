@@ -97,33 +97,6 @@ def test_self_join_dedup_shape(spark, fixtures):
     assert diag == len(a_pdf)  # every polygon intersects itself
 
 
-def test_spatial_join_compact_cover_identical_pairs(spark, fixtures):
-    """G6 with compact_cover=True (disjoint mixed-level broadcast cover +
-    ancestor-chain probes) must return the exact pair set of the plain
-    broadcast path — and the compacted cover must actually be smaller."""
-    from geopy_spark.operators.spatial_join import (polygon_cover_udf,
-                                                    spatial_join)
-    a_pdf, _ = fixtures
-    regions = spark.createDataFrame(a_pdf, schema=_REGIONS_SCHEMA)
-    pts = spark.range(4000).select(
-        F.col("id").alias("point_id"),
-        (F.pmod(F.col("id") * 37, F.lit(12000)) / 100 - 60).alias("lat"),
-        (F.pmod(F.col("id") * 91, F.lit(36000)) / 100 - 180).alias("lon"))
-    base = {(r.point_id, r.poly_id)
-            for r in spatial_join(pts, regions, level=7,
-                                  broadcast_regions=True).collect()}
-    comp = {(r.point_id, r.poly_id)
-            for r in spatial_join(pts, regions, level=7,
-                                  broadcast_regions=True,
-                                  compact_cover=True).collect()}
-    assert comp == base and len(base) > 0
-    plain_n = regions.select(F.explode(polygon_cover_udf(
-        F.col("ring"), 7, holes=F.col("holes")))).count()
-    comp_n = regions.select(F.explode(polygon_cover_udf(
-        F.col("ring"), 7, holes=F.col("holes"), compact=True))).count()
-    assert comp_n < plain_n
-
-
 def test_contains_kernel_decision_table():
     A = _sq(0, 0, 10)
     hole = [_sq(2, 2, 6)]

@@ -4,6 +4,7 @@ shuffle — pair-set equality vs the plain operator, and the plan
 guarantees: zero Exchanges on the bucketed⋈bucketed join, no cover UDF
 anywhere, exactly one points-side Exchange on the ad-hoc path."""
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,11 +20,14 @@ LEVEL = 6
 
 
 @pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
+def store(spark, tmp_path_factory, multipolygon_pdf):
     loc = str(tmp_path_factory.mktemp("polywh"))
     ensure_database(spark, "polydemo", loc)
+    # the two-part MultiPolygon checks per-geometry PIP grouping on the
+    # bucketed and ad-hoc paths against the batch operator
     regions = spark.createDataFrame(
-        synth.polygons_pdf(synth.oracle_polygons_holed(16, seed=7)),
+        pd.concat([synth.polygons_pdf(synth.oracle_polygons_holed(16, seed=7)),
+                   multipolygon_pdf], ignore_index=True),
         schema=_REGIONS_SCHEMA)
     pts = spark.range(0, 4000).select(
         F.col("id").alias("point_id"),
@@ -46,6 +50,9 @@ def test_bucketed_join_matches_plain_operator(spark, store):
            for r in PS.spatial_join_bucketed(
                spark, "polydemo.pts", "polydemo.cover").collect()}
     assert got == want and len(want) > 0
+    # hits in both MultiPolygon parts (lat 20..35 / -35..-20)
+    lat = {r.point_id: r.lat for r in pts.collect()}
+    assert {lat[p] > 0 for p, q in want if q == 900} == {True, False}
     adhoc = {(r.point_id, r.poly_id)
              for r in PS.spatial_join_against_cover(
                  pts, spark, "polydemo.cover", level=LEVEL).collect()}

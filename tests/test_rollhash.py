@@ -103,6 +103,22 @@ def test_batch_matches_per_doc_bit_for_bit(ngram):
         ([0], np.cumsum([h.size for h in ref])[:-1])))
 
 
+def test_batch_codepoint_bound_raises(monkeypatch):
+    """The batch's exactness bound is enforced: at or past
+    MAX_BATCH_CODEPOINTS concatenated codepoints the call raises instead
+    of returning wrong hashes; below it the output stays bit-identical
+    to the per-document path."""
+    docs = ["alpha bravo charlie delta", "echo foxtrot golf"]
+    total = sum(len(" ".join(d.split())) for d in docs)     # 41
+    ref = np.concatenate([R.shingle_hashes(t, 3) for t in docs])
+    monkeypatch.setattr(R, "MAX_BATCH_CODEPOINTS", total)
+    with pytest.raises(ValueError, match="codepoints"):
+        R.shingle_hashes_batch(docs, 3)
+    monkeypatch.setattr(R, "MAX_BATCH_CODEPOINTS", total + 1)
+    flat, _, _ = R.shingle_hashes_batch(docs, 3)
+    assert np.array_equal(flat, ref)
+
+
 def test_batch_empty_and_degenerate_inputs():
     flat, starts, lens = R.shingle_hashes_batch([], 3)
     assert flat.size == 0 and starts.size == 0 and lens.size == 0

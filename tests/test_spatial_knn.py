@@ -160,8 +160,9 @@ def test_holes_arrow_transport(spark):
 
     hits = computed.select(
         "poly_id",
-        pip_udf(F.lit(5.0), F.lit(5.0), F.col("poly_id"), F.col("ring"),
-                holes=F.col("holes")).alias("hit")).collect()
+        pip_udf(F.lit(5.0), F.lit(5.0), F.col("ring"),
+                holes=F.col("holes"), group=F.col("poly_id"))
+        .alias("hit")).collect()
     assert {r.poly_id: r.hit for r in hits} == {1: False, 2: True}
 
 

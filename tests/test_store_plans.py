@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from geopy_spark import synth
 from geopy_spark.entry_queries import _REGIONS_SCHEMA, regions_df
-from geopy_spark.functions.cells import cell_encode_udf
+from geopy_spark.functions.cells import cell_encode_col
 from geopy_spark.kernels import cells as K
 from geopy_spark.plans import explain as X
 from geopy_spark.sources.store import read_cells, write_points_sorted

@@ -56,9 +56,13 @@ def _write_file(pdf, path):
 
 
 def test_stream_pairs_match_batch_spatial_join(spark, tmp_path, regions_pdf,
-                                               regions):
+                                               multipolygon_pdf):
     """Two micro-batches of points through the stream path must produce
-    exactly the batch G6 operator's (point_id, poly_id) pairs."""
+    exactly the batch G6 operator's (point_id, poly_id) pairs — including
+    per-geometry grouping for the parts of a MultiPolygon."""
+    regions_pdf = pd.concat([regions_pdf, multipolygon_pdf],
+                            ignore_index=True)
+    regions = spark.createDataFrame(regions_pdf, schema=_REGIONS_SCHEMA)
     b0 = _point_rows(regions_pdf, 0, 18, "2026-01-01 00:00:00")
     b1 = _point_rows(regions_pdf, 100, 18, "2026-01-01 00:05:00")
     src = tmp_path / "src"
@@ -80,6 +84,8 @@ def test_stream_pairs_match_batch_spatial_join(spark, tmp_path, regions_pdf,
                                    level=LEVEL, broadcast_regions=True)
              .collect()}
     assert streamed == batch and len(batch) > 0
+    # both MultiPolygon parts contribute hits
+    assert {pid for pid, poly in batch if poly == 900} >= {12, 13, 112, 113}
 
 
 def test_windowed_poly_counts_finalize_across_batches(spark, tmp_path,
