@@ -5,83 +5,94 @@
   the BIG side of every spatial operator stays inside whole-stage
   codegen instead of paying an ArrowEvalPython round-trip
   (byte-identical to kernels.cells.cell_encode, asserted in
-  tests/test_cells.py).
-* ``cell_parent_expr`` / ``cell_level_col`` — pure Column bit math
-  (shiftright/masks), zero Python: hierarchy navigation stays inside
-  whole-stage codegen (G2).
-* ``cell_ring_udf`` — k-ring neighbors as ArrayType(Long) for explode-based
-  kNN expansion (G3).
+  tests/test_cells.py). ``latlon_to_ij_col`` is its grid-index half,
+  shared with kNN's occupied-cell histogram.
+* ``cell_i_col`` / ``cell_j_col`` / ``ij_to_cell_col`` — the same
+  ladders between cell ids and (i, j) grid indexes, for kNN's Column
+  disk fan-out.
+* ``cell_parent_expr`` — pure Column bit math (shiftright/masks), zero
+  Python: hierarchy navigation stays inside whole-stage codegen (G2).
+
+Cost model of the ladders. A Column expression is a tree, not a DAG: a
+spread step ``x = (x | x << s) & M`` names its input twice, so every
+step doubles the copies of the grid index (and of the whole
+clamp/wrap/floor subtree under it) that Catalyst analyses, optimizes and
+codegen compiles. Five unconditional steps made 32 copies, ~1,400 tree
+nodes per ``cell_encode_col``. The level is a plan-time constant and a
+grid index at level L is below 2^L, so a step with shift s ≥ L is the
+identity and is not emitted: at most 3 steps (8 copies) up to level 8,
+4 at 9–16, all 5 only at 17–28. Ids are bit-identical at every level.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
-from ..kernels import cells as K
-
-# Morton spread masks (kernels.cells._spread) — all fit in signed int64
+# Morton ladder steps (kernels.cells._spread/_compact) as (shift, mask
+# after the step); every mask fits in signed int64
+_SPREAD_STEPS = ((16, 0x0000FFFF0000FFFF), (8, 0x00FF00FF00FF00FF),
+                 (4, 0x0F0F0F0F0F0F0F0F), (2, 0x3333333333333333),
+                 (1, 0x5555555555555555))
+_COMPACT_STEPS = ((1, 0x3333333333333333), (2, 0x0F0F0F0F0F0F0F0F),
+                  (4, 0x00FF00FF00FF00FF), (8, 0x0000FFFF0000FFFF),
+                  (16, 0x00000000FFFFFFFF))
 _M1 = 0x5555555555555555
-_M2 = 0x3333333333333333
-_M4 = 0x0F0F0F0F0F0F0F0F
-_M8 = 0x00FF00FF00FF00FF
-_M16 = 0x0000FFFF0000FFFF
 
 
-_M32 = 0x00000000FFFFFFFF
+def _spread_col(x: Column, level: int) -> Column:
+    """Column twin of kernels.cells._spread for a grid index x < 2^level
+    (level ≤ 28): bit k of x lands at position 2k. The masked shifts
+    never reach the sign bit, so plain long arithmetic is exact.
 
-
-def _spread_col(x: Column) -> Column:
-    """Column twin of kernels.cells._spread for inputs < 2^28 (level ≤
-    28 grid indexes): bit k of x lands at position 2k. The masked shifts
-    never reach the sign bit, so plain long arithmetic is exact."""
-    x = x.bitwiseOR(F.shiftleft(x, 16)).bitwiseAND(F.lit(_M16))
-    x = x.bitwiseOR(F.shiftleft(x, 8)).bitwiseAND(F.lit(_M8))
-    x = x.bitwiseOR(F.shiftleft(x, 4)).bitwiseAND(F.lit(_M4))
-    x = x.bitwiseOR(F.shiftleft(x, 2)).bitwiseAND(F.lit(_M2))
-    x = x.bitwiseOR(F.shiftleft(x, 1)).bitwiseAND(F.lit(_M1))
+    A step with shift s is the identity for x < 2^s, so only the steps
+    with s < level are emitted (module docstring: each step doubles the
+    copies of x in the tree)."""
+    for s, m in _SPREAD_STEPS:
+        if s < level:
+            x = x.bitwiseOR(F.shiftleft(x, s)).bitwiseAND(F.lit(m))
     return x
 
 
-def _compact_col(x: Column) -> Column:
-    """Column twin of kernels.cells._compact: gather even-position bits
-    into the low 32 (inverse of _spread_col)."""
+def _compact_col(x: Column, level: int) -> Column:
+    """Column twin of kernels.cells._compact (inverse of _spread_col):
+    gather the even-position bits of a level-``level`` Morton code into
+    the low ``level`` bits. Before the step with shift s the low s bits
+    of x are already gathered, so steps with s ≥ level have nothing left
+    to move and are skipped as in _spread_col."""
     x = x.bitwiseAND(F.lit(_M1))
-    x = x.bitwiseOR(F.shiftright(x, 1)).bitwiseAND(F.lit(_M2))
-    x = x.bitwiseOR(F.shiftright(x, 2)).bitwiseAND(F.lit(_M4))
-    x = x.bitwiseOR(F.shiftright(x, 4)).bitwiseAND(F.lit(_M8))
-    x = x.bitwiseOR(F.shiftright(x, 8)).bitwiseAND(F.lit(_M16))
-    x = x.bitwiseOR(F.shiftright(x, 16)).bitwiseAND(F.lit(_M32))
+    for s, m in _COMPACT_STEPS:
+        if s < level:
+            x = x.bitwiseOR(F.shiftright(x, s)).bitwiseAND(F.lit(m))
     return x
 
 
-def cell_i_col(cell: Column) -> Column:
-    """Latitude grid index of a cell id — pure Column bit math (twin of
-    kernels.cells.cell_to_ij's first output)."""
-    return _compact_col(F.shiftright(cell, 6))
+def cell_i_col(cell: Column, level: int) -> Column:
+    """Latitude grid index of a cell id at ``level`` — pure Column bit
+    math (twin of kernels.cells.cell_to_ij's first output)."""
+    return _compact_col(F.shiftright(cell, 6), level)
 
 
-def cell_j_col(cell: Column) -> Column:
-    """Longitude grid index of a cell id (twin of cell_to_ij's second
-    output)."""
-    return _compact_col(F.shiftright(cell, 5))
+def cell_j_col(cell: Column, level: int) -> Column:
+    """Longitude grid index of a cell id at ``level`` (twin of
+    cell_to_ij's second output)."""
+    return _compact_col(F.shiftright(cell, 5), level)
 
 
 def ij_to_cell_col(i: Column, j: Column, level: int) -> Column:
     """(i, j) grid indexes → cell id at ``level`` — Column twin of
     kernels.cells.ij_to_cell."""
-    m = F.shiftleft(_spread_col(i), 1).bitwiseOR(_spread_col(j))
+    m = (F.shiftleft(_spread_col(i, level), 1)
+         .bitwiseOR(_spread_col(j, level)))
     return F.shiftleft(m, 5).bitwiseOR(F.lit(level))
 
 
-def cell_encode_col(lat: Column, lon: Column, level: int) -> Column:
-    """(lat°, lon°) → int64 cell id at ``level`` — pure Column algebra,
-    replicating kernels.cells.cell_encode operation-for-operation (same
-    IEEE double sequence: clamp/wrap, (x+off)/span*2^L, floor, min) so
-    ids are byte-identical to the numpy kernel's."""
+def latlon_to_ij_col(lat: Column, lon: Column,
+                     level: int) -> tuple[Column, Column]:
+    """(lat°, lon°) → (i, j) long grid indexes at ``level`` — the
+    clamp/wrap, (x+off)/span*2^L, floor, min sequence of
+    kernels.cells.latlon_to_ij, one IEEE double op for op, so every
+    Column keyed by it agrees with the numpy kernels."""
     n1 = (1 << level) - 1
     nf = float(2 ** level)
     la = F.least(F.greatest(lat.cast("double"), F.lit(-90.0)), F.lit(90.0))
@@ -90,12 +101,15 @@ def cell_encode_col(lat: Column, lon: Column, level: int) -> Column:
                 F.lit(n1))
     j = F.least(F.floor((lo + F.lit(180.0)) / F.lit(360.0) * F.lit(nf)),
                 F.lit(n1))
-    m = F.shiftleft(_spread_col(i), 1).bitwiseOR(_spread_col(j))
-    return F.shiftleft(m, 5).bitwiseOR(F.lit(level))
+    return i, j
 
 
-def cell_level_col(cell: Column) -> Column:
-    return cell.bitwiseAND(F.lit(31))
+def cell_encode_col(lat: Column, lon: Column, level: int) -> Column:
+    """(lat°, lon°) → int64 cell id at ``level`` — pure Column algebra,
+    replicating kernels.cells.cell_encode operation-for-operation
+    (latlon_to_ij_col, then the level-bounded Morton interleave) so ids
+    are byte-identical to the numpy kernel's."""
+    return ij_to_cell_col(*latlon_to_ij_col(lat, lon, level), level)
 
 
 def cell_parent_expr(cell_name: str, parent_level: int) -> Column:
@@ -106,21 +120,3 @@ def cell_parent_expr(cell_name: str, parent_level: int) -> Column:
         f"2 * (CAST(({cell_name} & 31) AS INT) - {parent_level})), 5) | {parent_level}"
     )
 
-
-def cell_ring_udf(cell: Column, r: int) -> Column:
-    @F.pandas_udf(ArrayType(LongType()))
-    def _ring(c: pd.Series) -> pd.Series:
-        rings = K.cell_ring(c.to_numpy(np.int64), r)
-        return pd.Series([a.tolist() for a in rings])
-    return _ring(cell)
-
-
-def cell_disk_udf(cell: Column, r: int) -> Column:
-    """All cells with Chebyshev distance ≤ r (union of rings 0..r)."""
-    @F.pandas_udf(ArrayType(LongType()))
-    def _disk(c: pd.Series) -> pd.Series:
-        arr = c.to_numpy(np.int64)
-        parts = [K.cell_ring(arr, k) for k in range(r + 1)]
-        return pd.Series([np.concatenate([parts[k][n] for k in range(r + 1)]).tolist()
-                          for n in range(len(arr))])
-    return _disk(cell)

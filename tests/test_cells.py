@@ -87,7 +87,8 @@ def test_z_order_locality():
 
 def test_column_encode_matches_kernel(spark):
     """cell_encode_col is pure Column bit math — ids must
-    stay byte-identical to the numpy kernel across levels, hemisphere
+    stay byte-identical to the numpy kernel at every level (the Morton
+    ladder changes shape at levels 2, 3, 5, 9 and 17), hemisphere
     edges, clamp/wrap inputs and cell boundaries."""
     import pandas as pd
     from pyspark.sql import functions as F
@@ -105,12 +106,13 @@ def test_column_encode_matches_kernel(spark):
     ])
     pdf = pd.DataFrame({"lat": lat, "lon": lon})
     df = spark.createDataFrame(pdf)
-    for lvl in (0, 1, 7, 8, 12, 28):
-        got = np.array(
-            df.select(cell_encode_col(F.col("lat"), F.col("lon"), lvl)
-                      .alias("c")).toPandas()["c"], dtype=np.int64)
+    levels = range(K.MAX_LEVEL + 1)
+    got = df.select(*[cell_encode_col(F.col("lat"), F.col("lon"), lvl)
+                      .alias(f"c{lvl}") for lvl in levels]).toPandas()
+    for lvl in levels:
         want = K.cell_encode(lat, lon, lvl)
-        assert np.array_equal(got, want), f"level {lvl} mismatch"
+        assert np.array_equal(got[f"c{lvl}"].to_numpy(np.int64), want), \
+            f"level {lvl} mismatch"
     # the expression must stay UDF-free (codegen path, guide §4.1)
     plan = df.select(cell_encode_col(F.col("lat"), F.col("lon"), 8))._jdf \
         .queryExecution().executedPlan().toString()
@@ -129,15 +131,46 @@ def test_column_ij_roundtrip_matches_kernel(spark):
     rng = np.random.default_rng(12)
     lat = rng.uniform(-90, 90, 3000)
     lon = rng.uniform(-180, 180, 3000)
-    for lvl in (1, 8, 15, 28):
-        cells = K.cell_encode(lat, lon, lvl)
-        df = spark.createDataFrame(pd.DataFrame({"cell": cells}))
-        got = df.select(cell_i_col(F.col("cell")).alias("i"),
-                        cell_j_col(F.col("cell")).alias("j"),
-                        ij_to_cell_col(cell_i_col(F.col("cell")),
-                                       cell_j_col(F.col("cell")),
-                                       lvl).alias("back")).toPandas()
-        ii, jj, _ = K.cell_to_ij(cells)
-        assert np.array_equal(got["i"].to_numpy(np.int64), ii.astype(np.int64))
-        assert np.array_equal(got["j"].to_numpy(np.int64), jj.astype(np.int64))
-        assert np.array_equal(got["back"].to_numpy(np.int64), cells)
+    levels = range(K.MAX_LEVEL + 1)
+    cells = {lvl: K.cell_encode(lat, lon, lvl) for lvl in levels}
+    df = spark.createDataFrame(pd.DataFrame(
+        {f"c{lvl}": cells[lvl] for lvl in levels}))
+    ij = df.select(*[col for lvl in levels for col in (
+        cell_i_col(F.col(f"c{lvl}"), lvl).alias(f"i{lvl}"),
+        cell_j_col(F.col(f"c{lvl}"), lvl).alias(f"j{lvl}"))])
+    # `back` reads the projected i/j columns; inlining the compact
+    # ladders into both spread ladders would multiply the tree sizes
+    got = ij.select("*", *[
+        ij_to_cell_col(F.col(f"i{lvl}"), F.col(f"j{lvl}"), lvl)
+        .alias(f"back{lvl}") for lvl in levels]).toPandas()
+    for lvl in levels:
+        ii, jj, _ = K.cell_to_ij(cells[lvl])
+        assert np.array_equal(got[f"i{lvl}"].to_numpy(np.int64),
+                              ii.astype(np.int64)), f"level {lvl} i"
+        assert np.array_equal(got[f"j{lvl}"].to_numpy(np.int64),
+                              jj.astype(np.int64)), f"level {lvl} j"
+        assert np.array_equal(got[f"back{lvl}"].to_numpy(np.int64),
+                              cells[lvl]), f"level {lvl} back"
+
+
+def test_column_cell_expressions_stay_small(spark):
+    """The Morton ladders emit only the steps the level needs: every
+    step names its input twice, so the unconditional five-step ladder
+    made 32 copies of the grid index (1,407 analysed tree lines for one
+    encode at any level). Pinned at level 8 (3 steps)."""
+    from pyspark.sql import functions as F
+
+    from geopy_spark.functions.cells import (cell_encode_col, cell_i_col,
+                                             ij_to_cell_col)
+
+    df = spark.createDataFrame([(1.0, 2.0, 3)],
+                               "lat double, lon double, cell long")
+
+    def tree_lines(col):
+        expr = df.select(col.alias("x"))._jdf.queryExecution() \
+            .analyzed().expressions().apply(0)
+        return len(expr.treeString().splitlines())
+
+    assert tree_lines(cell_encode_col(F.col("lat"), F.col("lon"), 8)) <= 400
+    assert tree_lines(cell_i_col(F.col("cell"), 8)) <= 100
+    assert tree_lines(ij_to_cell_col(F.col("cell"), F.col("cell"), 8)) <= 100

@@ -3,7 +3,9 @@
 Prints one row per registry query: real Exchange-node count (formatted
 plans repeat node names in the detail section — count `(\\d+) Exchange`
 headers, NOT substring hits, which read 0/double), python-eval node
-counts, broadcast/SMJ joins, scans. Run it whenever a plan-shaping
+counts, broadcast/SMJ joins, scans, and `expr_chars`, the length of
+the optimized logical plan's string (a proxy for the expression-tree
+size that Catalyst and codegen walk). Run it whenever a plan-shaping
 change lands:
 
     python tools/plan_audit.py [sf_dir]
@@ -33,7 +35,8 @@ def exchange_count(plan: str) -> int:
 def audit(spark, sf_dir: str) -> list[dict]:
     out = []
     for name, fn in QUERIES.items():
-        p = plan_text(fn(spark, sf_dir))
+        df = fn(spark, sf_dir)
+        p = plan_text(df)
         out.append({
             "query": name,
             "exchanges": exchange_count(p),
@@ -44,6 +47,8 @@ def audit(spark, sf_dir: str) -> list[dict]:
             "bhj": p.count("BroadcastHashJoin") // 2,
             "smj": p.count("SortMergeJoin") // 2,
             "scans": p.count("Scan parquet") // 2,
+            "expr_chars": len(
+                df._jdf.queryExecution().optimizedPlan().toString()),
         })
     return out
 
